@@ -853,9 +853,7 @@ def q_bpe_strict_batch(spark, sf_dir):
     # corpus pass cannot run twice under the cache race.
     from concurrent.futures import ThreadPoolExecutor
 
-    from ia_hadoop_tools_spark.operators.components import (
-        release_local_checkpoint,
-    )
+    from ia_hadoop_tools_spark.plans.introspect import release_local_checkpoint
 
     vocab = _initial_symbol_vocab(docs, "text")
     leaf = None

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ia_hadoop_tools_spark.plans.introspect import release_local_checkpoint
+
 #: split pattern for the corpus -> word pass. Pinned to the explicit
 #: ASCII class because \\s differs across engines (Java includes \\x0B,
 #: RE2/DuckDB does not, Python's str.split() adds Unicode spaces); the
@@ -150,14 +152,6 @@ def _merge_pair(vocab: DataFrame, a: str, b: str) -> DataFrame:
     return vocab.withColumn(
         "syms", F.aggregate(F.col("syms"), init, step, finish)
     )
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    from ia_hadoop_tools_spark.operators.components import (
-        release_local_checkpoint,
-    )
-
-    release_local_checkpoint(df)
 
 
 #: symbol-boundary markers inside the encoder's fold state: every symbol
@@ -336,15 +330,8 @@ def _initial_symbol_vocab(df: DataFrame, text_col: str) -> DataFrame:
 #: is ONE stage with ZERO exchanges instead of a 2-stage AQE round trip —
 #: the measured per-step floor of the sequential trainer.  Above the
 #: threshold (large word vocabularies at corpus scale) the vocab keeps its
-#: source partitioning.  ``$SPARK_GRAFT_BPE_ONE_PART_VOCAB`` overrides.
+#: source partitioning.
 BPE_ONE_PARTITION_VOCAB_ROWS = 65536
-
-
-def _one_partition_vocab_budget() -> int:
-    import os
-
-    raw = os.environ.get("SPARK_GRAFT_BPE_ONE_PART_VOCAB")
-    return int(raw) if raw else BPE_ONE_PARTITION_VOCAB_ROWS
 
 
 def bpe_train(
@@ -387,7 +374,7 @@ def bpe_train(
         _initial_symbol_vocab(df, text_col) if owns_vocab else symbol_vocab
     )
     vocab = base_vocab
-    if vocab_rows is not None and vocab_rows <= _one_partition_vocab_budget():
+    if vocab_rows is not None and vocab_rows <= BPE_ONE_PARTITION_VOCAB_ROWS:
         vocab = vocab.coalesce(1)
     initial = vocab
 
@@ -451,7 +438,7 @@ def bpe_train(
             # truncates the stacked fold-expression lineage
             vocab = vocab.localCheckpoint(eager=True)
             if last_checkpoint is not None:
-                _release_checkpoint(last_checkpoint)
+                release_local_checkpoint(last_checkpoint)
             last_checkpoint = vocab
             if not prev_is_checkpoint:
                 _release(prev)
@@ -467,9 +454,9 @@ def bpe_train(
     if not prev_is_checkpoint:
         _release(prev)
     if last_checkpoint is not None and last_checkpoint is not prev:
-        _release_checkpoint(last_checkpoint)
+        release_local_checkpoint(last_checkpoint)
     elif prev_is_checkpoint:
-        _release_checkpoint(prev)
+        release_local_checkpoint(prev)
     if owns_vocab and initial is not base_vocab:
         # the coalesce wrapper replaced `initial`: release the underlying
         # persisted frame the wrapper reads through
@@ -658,7 +645,7 @@ def bpe_train_batched(
     # bpe_train's ``vocab_rows``); results are partitioning-independent
     one_part = (
         vocab_rows is not None
-        and vocab_rows <= _one_partition_vocab_budget()
+        and vocab_rows <= BPE_ONE_PARTITION_VOCAB_ROWS
     )
     if one_part:
         vocab = vocab.coalesce(1)
@@ -761,7 +748,7 @@ def bpe_train_batched(
         if applied_since_cut >= materialize_every:
             vocab = vocab.localCheckpoint(eager=True)
             if last_checkpoint is not None:
-                _release_checkpoint(last_checkpoint)
+                release_local_checkpoint(last_checkpoint)
             last_checkpoint = vocab
             if not prev_is_checkpoint:
                 _release(prev)
@@ -778,9 +765,9 @@ def bpe_train_batched(
     if not prev_is_checkpoint:
         _release(prev)
     if last_checkpoint is not None and last_checkpoint is not prev:
-        _release_checkpoint(last_checkpoint)
+        release_local_checkpoint(last_checkpoint)
     elif prev_is_checkpoint:
-        _release_checkpoint(prev)
+        release_local_checkpoint(prev)
     if owns_vocab and initial is not base_vocab:
         # the coalesce wrapper replaced `initial`: release the underlying
         # persisted frame the wrapper reads through

@@ -30,24 +30,9 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ia_hadoop_tools_spark.plans.introspect import release_local_checkpoint
+
 logger = logging.getLogger(__name__)
-
-
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint'ed DataFrame's storage blocks.
-
-    ``DataFrame.unpersist`` only uncaches CacheManager entries; the
-    checkpoint's blocks belong to the RDD inside the LogicalRDD leaf and
-    otherwise wait for the ContextCleaner — which in a long iterative
-    loop means executor storage fills with stale checkpoint blocks.
-    Best-effort: reaches through the private plan handle, and a failure
-    just defers to the cleaner.  Only call once nothing can recompute
-    THROUGH the checkpoint (i.e. a newer checkpoint is materialized).
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
 
 
 def _truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -75,8 +60,7 @@ def _truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     files are written (the classic rdd.checkpoint caveat), so the cluster
     branch would pay double compute per round for the saved job.
     """
-    sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isDefined():
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=eager)
 

@@ -27,10 +27,15 @@ fully lazy (no Spark job until the caller acts).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ia_hadoop_tools_spark.operators.components import release_local_checkpoint
+from ia_hadoop_tools_spark.plans.introspect import (
+    leaf_bytes,
+    max_partition_bytes,
+    release_local_checkpoint,
+)
 
 #: fixed-point scale: rank 1.0 == 1_000_000_000
 PR_SCALE = 1_000_000_000
@@ -81,51 +86,6 @@ def symmetric_edges(pairs: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     return fwd.unionByName(rev).distinct()
 
 
-def _edges_exceed_lazy_budget(edges: DataFrame) -> bool:
-    """True when the edge plan's summed LEAF size estimates say the lazy
-    shape's ~2x-per-superstep subtree re-execution would dominate —
-    decided with zero jobs from optimizer stats (the round-11
-    ensure_min_partitions / bloom._needs_mask_reduce technique; an
-    ``.rdd`` probe would execute upstream AQE stages at plan-build time).
-
-    Threshold: ``$SPARK_GRAFT_PR_CACHE_LEAF_BYTES`` or
-    8 x maxPartitionBytes (1 GiB at the default 128 MB split).  Measured
-    bounds for the crossover (scripts/probe_pagerank_cache_r12.py, the
-    registry part<->supplier graph, 5 supersteps, 8 GB heap): 21 MB
-    leaves (sf0.1) lazy wins x1.2-1.65 (round-11 A/B); 213 MB (sf1)
-    parity (lazy 20.4 s / cached 19.7 s med); 2.1 GB (sf10) the lazy
-    shape FAILS with SparkOutOfMemoryError — its ~2x-per-superstep
-    subtrees execute concurrently within one action and exhaust
-    execution memory — while the cached shape completes in ~95 s.  Any
-    budget inside (256 MB, 2 GB) satisfies the measurements; 1 GiB is
-    the midpoint and scales with the configured split size.  Unknown-
-    size leaves (cached/RDD-backed plans carry Long.Max estimates) and
-    probe failures stay LAZY, the measured-faster local shape
-    (re-scanning an already-materialized input reads a cache)."""
-    import os
-
-    try:
-        from ia_hadoop_tools_spark.operators.textops import (
-            _max_partition_bytes,
-        )
-
-        raw = os.environ.get("SPARK_GRAFT_PR_CACHE_LEAF_BYTES")
-        budget = (
-            int(raw) if raw else 8 * _max_partition_bytes(edges)
-        )
-        unknown = 1 << 62  # Long.Max-ish sentinel for statless leaves
-        leaves = edges._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            n = int(str(leaves.apply(i).stats().sizeInBytes()))
-            if n >= unknown:
-                return False
-            total += n
-        return total > budget
-    except Exception:
-        return False
-
-
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
@@ -170,20 +130,29 @@ def pagerank(
     ``True`` when checkpoints/convergence split the run into multiple
     actions (``materialize_every``/``epsilon``), where exchange reuse
     stops and the cache pays for itself, OR when the edge plan's LEAF
-    size estimates exceed a budget (8 x maxPartitionBytes, ~1 GiB, by
-    default; ``$SPARK_GRAFT_PR_CACHE_LEAF_BYTES`` overrides) — at that
-    size the lazy shape's ~2x-per-superstep re-execution of the edge
-    pipeline re-pays the dominant scan+shuffle every iteration, and
-    measured at sf10 it exhausts execution memory outright (see
-    ``_edges_exceed_lazy_budget`` for the probe numbers).  Small graphs keep the LAZY shape: within a single
+    size estimates exceed 8 x maxPartitionBytes (1 GiB at the default
+    128 MB split) — at that size the lazy shape's ~2x-per-superstep
+    re-execution of the edge pipeline re-pays the dominant scan+shuffle
+    every iteration.  Measured crossover (OPTIMIZATION_r12.md §4 and
+    BASELINE.md "Round-12 PAGERANK CACHE CROSSOVER": the registry
+    part<->supplier graph, 5 supersteps, 8 GB heap): 21 MB leaves
+    (sf0.1) lazy wins x1.2-1.65; 213 MB (sf1) parity; 2.1 GB (sf10) the
+    lazy shape FAILS with SparkOutOfMemoryError — its subtrees execute
+    concurrently within one action and exhaust execution memory — while
+    the cached shape completes in ~95 s.  Any budget inside (256 MB, 2 GB) satisfies the
+    measurements; 1 GiB is the midpoint and scales with the configured
+    split size.  Small graphs keep the LAZY shape: within a single
     action the duplicated subtrees are cheap codegen pipelines running
     concurrently, and persisting measured ~20% SLOWER at bench SFs (the
     InMemoryRelation materialization serializes the run — round-11 A/B).
-    Unknown-size leaves (cached/RDD-backed: Long.Max estimates) stay
-    lazy: such inputs are already materialized by their producer, so a
-    re-scan reads a cache, not storage.  The decision costs zero jobs
-    (optimizer leaf stats only) and is visible in the plan
-    (InMemoryRelation appears only above the threshold).
+    Unknown-size leaves (RDD-backed frames such as ``createDataFrame``
+    over local rows) and a failed statistics read stay lazy.  A cached
+    or checkpointed input carries its real size and follows the budget.
+    The decision costs zero jobs (optimizer leaf stats only) and is
+    visible in the plan (InMemoryRelation appears only above the
+    threshold).  An input the caller has already persisted is used as it
+    is: ``pagerank`` neither persists nor unpersists it, and it is not
+    among ``pr_caches``.
 
     ``epsilon`` (scaled-integer units, e.g. ``scale // 10**6`` for 1e-3
     rank units) switches to CONVERGENCE MODE: ``iterations`` becomes the
@@ -217,15 +186,21 @@ def pagerank(
         .distinct()
     )
     if cache_edges is None:
-        cache_edges = (
-            materialize_every is not None
-            or epsilon is not None
-            or _edges_exceed_lazy_budget(edges)
-        )
+        cache_edges = materialize_every is not None or epsilon is not None
+        if not cache_edges:
+            size = leaf_bytes(edges)
+            # unknown size stays lazy
+            budget = 8 * max_partition_bytes(edges.sparkSession)
+            cache_edges = size is not None and size > budget
+    # a frame the caller already persisted stays theirs: never persisted
+    # or released here
+    if edges.storageLevel == StorageLevel.NONE:
+        own = (edges, outdeg, nodes)
+    else:
+        own = (outdeg, nodes)
     if cache_edges:
-        edges = edges.persist()
-        outdeg = outdeg.persist()
-        nodes = nodes.persist()
+        for c in own:
+            c.persist()
 
     def superstep(ranks: DataFrame) -> DataFrame:
         # per-SOURCE contribution first: a node-sized join (rank vector
@@ -311,18 +286,15 @@ def pagerank(
             # blocks are safe to free even when ranks WAS that checkpoint
             release_local_checkpoint(_last_cp)
         if cache_edges:
-            edges.unpersist()
-            outdeg.unpersist()
-            nodes.unpersist()
+            for c in own:
+                c.unpersist()
     ranks.pr_supersteps = supersteps
     ranks.pr_converged = converged
     ranks.pr_delta = delta
     # release handles (the assign_cache convention): in lazy mode the
     # internal persists stay pinned for the caller's action — a long-lived
     # session unpersists them through pr_caches once done
-    ranks.pr_caches = (
-        () if (eager or not cache_edges) else (edges, outdeg, nodes)
-    )
+    ranks.pr_caches = () if (eager or not cache_edges) else own
     return ranks
 
 

@@ -310,9 +310,7 @@ def release_pack_cache(out: DataFrame) -> None:
     would miss the localCheckpoint RDD's storage blocks."""
     cache = getattr(out, "pack_cache", None)
     if cache is not None:
-        from ia_hadoop_tools_spark.operators.components import (
-            release_local_checkpoint,
-        )
+        from ia_hadoop_tools_spark.plans.introspect import release_local_checkpoint
 
         release_local_checkpoint(cache)
 

@@ -884,7 +884,7 @@ def assign_clusters(
       uses; a NULL struct == not a join candidate).  Plan: the argmax
       exchange is gone and the n*k interpreted HOF dot evaluations
       (~4k element-evals per vector at k=64, dim=64) become one numpy
-      pass.  Measured crossover (scripts/probe_assign_arrow.py,
+      pass.  Measured crossover (OPTIMIZATION_r11.md §9b,
       interleaved, values identical at every scale): 2k vectors join
       0.77 s / projection 2.06 s; 20k parity (2.51 / 2.77); 200k
       projection WINS (6.12 / 5.12) and the gap grows with n — at
@@ -926,7 +926,7 @@ def assign_clusters(
         # is sqrt(dots[k]) — bit-identical to l2_norm, and crucially NOT a
         # separate interpreted-HOF column that filter pushdown / projection
         # collapse would re-inline into all k structs (measured x1.9 at 20k
-        # vectors before this; scripts/probe_assign_arrow.py)
+        # vectors before this; OPTIMIZATION_r11.md §9b)
         src = ensure_min_partitions(df.select(id_col, vec_col)).select(
             F.col(id_col),
             plane_dots_arrow(

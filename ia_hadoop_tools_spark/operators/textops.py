@@ -40,6 +40,7 @@ from ia_hadoop_tools_spark.functions.textfns import (
     token_count,
     word_shingles,
 )
+from ia_hadoop_tools_spark.plans.introspect import leaf_bytes, max_partition_bytes
 
 
 def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
@@ -64,37 +65,18 @@ def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
     would mis-skip. Threshold ``n * maxPartitionBytes`` mirrors the old
     partition-count rule: a leaf set big enough to yield ~n scan splits
     (or any shuffle above it, which yields shuffle.partitions) never
-    repartitions. Unknown-size leaves (cached/RDD-backed: Long.Max
-    estimates) land above the threshold — the no-op side, matching the old
-    rule (such inputs are materialized, already spread by their producer).
+    repartitions.  Cached and checkpointed inputs carry real leaf
+    estimates and follow the same rule; RDD-backed leaves (Long.Max
+    estimates) and a failed statistics read leave the plan unchanged.
     """
     if n is None:
         n = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        leaves = plan.collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            total += int(str(leaves.apply(i).stats().sizeInBytes()))
-            if total >= n * _max_partition_bytes(df):
-                return df
-        return df.repartition(n)
-    except Exception:
-        # fall back to the pre-round-11 probe (may execute AQE stages)
-        if df.rdd.getNumPartitions() < n:
-            return df.repartition(n)
+    size = leaf_bytes(df)
+    limit = n * max_partition_bytes(df.sparkSession)
+    # unknown size (RDD-backed leaves, failed read): leave the plan alone
+    if size is None or size >= limit:
         return df
-
-
-def _max_partition_bytes(df: DataFrame) -> int:
-    raw = df.sparkSession.conf.get(
-        "spark.sql.files.maxPartitionBytes", "134217728"
-    )
-    try:
-        return int(raw)
-    except ValueError:
-        jvm = df.sparkSession.sparkContext._jvm
-        return int(jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
+    return df.repartition(n)
 
 
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -50,6 +50,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ia_hadoop_tools_spark.plans.introspect import leaf_bytes, max_partition_bytes
+
 #: second-hash salt; any fixed literal works, it only has to match
 #: between build and probe (both call :func:`_hash_cols`).
 BLOOM_SALT = 0x9E3779B1
@@ -176,18 +178,10 @@ def _needs_mask_reduce(df: DataFrame) -> bool:
     toward APPLYING the second reduce level: an unknown or inflated
     estimate costs one repartition of KB-sized mask rows; skipping it
     wrongly would collect a mask row per partition on the driver."""
-    try:
-        from ia_hadoop_tools_spark.operators.textops import (
-            _max_partition_bytes,
-        )
-
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            total += int(str(leaves.apply(i).stats().sizeInBytes()))
-        return total > MASK_REDUCE_PARTITIONS * _max_partition_bytes(df)
-    except Exception:
-        return True  # safe side: bounded extra level, tiny rows
+    size = leaf_bytes(df)
+    limit = MASK_REDUCE_PARTITIONS * max_partition_bytes(df.sparkSession)
+    # unknown size: apply the bounded extra level (tiny rows)
+    return size is None or size > limit
 
 
 def bloom_build(

@@ -61,18 +61,3 @@ def bucketed_tables_join(
     keys = [on] if isinstance(on, str) else list(on)
     return spark.table(left_table).join(spark.table(right_table), on=keys, how=how)
 
-
-def plan_has_exchange(df: DataFrame) -> bool:
-    """True if the physical plan contains a SHUFFLE Exchange — test/diagnostic
-    helper for asserting co-located layouts actually avoided the shuffle.
-    BroadcastExchange (no shuffle) and ReusedExchange wrappers around it do
-    NOT count: a broadcast join is precisely the no-shuffle outcome this
-    helper exists to recognize."""
-    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "simple"
-    )
-    return any(
-        marker in plan
-        for marker in ("Exchange hashpartitioning", "Exchange rangepartitioning",
-                       "Exchange SinglePartition")
-    )

@@ -390,6 +390,7 @@ COMMENTARY = {
 def main() -> None:
     from ia_hadoop_tools_spark.driver_queries import QUERIES as _REGISTRY
     from ia_hadoop_tools_spark.pending_queries import PENDING_QUERIES
+    from ia_hadoop_tools_spark.plans.introspect import explain_string
     from ia_hadoop_tools_spark.session import get_spark
 
     QUERIES = {**_REGISTRY, **PENDING_QUERIES}
@@ -405,9 +406,7 @@ def main() -> None:
     ]
     for name, why in COMMENTARY.items():
         df = QUERIES[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "simple"
-        )
+        plan = explain_string(df, "simple")
         out += [f"## {name}", "", why, "", "```", plan.rstrip(), "```", ""]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "PLANS.md"), "w", encoding="utf-8") as fh:

@@ -63,13 +63,13 @@ def test_pagerank_star_ranks_hub_highest(spark):
     assert len(set(spokes)) == 1
 
 
-def test_pagerank_cache_edges_auto_from_leaf_estimates(
-    spark, tmp_path, monkeypatch
-):
+def test_pagerank_cache_edges_auto_from_leaf_estimates(spark, tmp_path):
     """VERDICT r11 #4: cache_edges=None decides from the optimizer's LEAF
     size estimates (zero jobs) — small graphs keep the lazy shape (no
-    InMemoryRelation), a leaf set past the budget persists the edge
-    pipeline, and both shapes return identical ranks."""
+    InMemoryRelation), a leaf set past the budget (8 x maxPartitionBytes)
+    persists the edge pipeline, and both shapes return identical ranks."""
+    from ia_hadoop_tools_spark.plans.introspect import leaf_bytes
+
     raw = symmetric_edges(
         spark.createDataFrame(
             [(i, (i * 5) % 17) for i in range(30)], "src long, dst long"
@@ -78,7 +78,8 @@ def test_pagerank_cache_edges_auto_from_leaf_estimates(
         "dst",
     )
     # parquet-backed leaves carry real size stats (createDataFrame plans
-    # are RDD-backed: Long.Max estimates -> the unknown rule, below)
+    # are RDD-backed: Long.Max estimates -> the unknown rule, pinned in
+    # test_introspect.py)
     raw.write.parquet(str(tmp_path / "edges"))
     edges = spark.read.parquet(str(tmp_path / "edges"))
 
@@ -88,8 +89,18 @@ def test_pagerank_cache_edges_auto_from_leaf_estimates(
     lazy = pagerank(edges, iterations=3)
     assert "InMemoryTableScan" not in plan_of(lazy)
 
-    monkeypatch.setenv("SPARK_GRAFT_PR_CACHE_LEAF_BYTES", "1")
-    cached = pagerank(edges, iterations=3)
+    # lower the split size so the budget (8 splits) falls to half the
+    # leaf size; the decision is taken at construction
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(leaf_bytes(edges) // 16))
+    try:
+        cached = pagerank(edges, iterations=3)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
     assert "InMemoryTableScan" in plan_of(cached)
     a = {r["node"]: r["rank"] for r in lazy.collect()}
     b = {r["node"]: r["rank"] for r in cached.collect()}
@@ -97,9 +108,30 @@ def test_pagerank_cache_edges_auto_from_leaf_estimates(
     for c in cached.pr_caches:
         c.unpersist()
 
-    # unknown-size leaves (RDD-backed plans carry Long.Max estimates)
-    # stay lazy even under a tiny budget
-    assert "InMemoryTableScan" not in plan_of(pagerank(raw, iterations=2))
+
+def test_pagerank_leaves_caller_cache_alone(spark, tmp_path):
+    """An edge frame the caller persisted stays cached after pagerank:
+    it is neither re-persisted nor unpersisted, and it is not handed back
+    in pr_caches (the node and out-degree caches still are)."""
+    spark.createDataFrame(
+        [(i, (i * 5) % 17) for i in range(30)], "src long, dst long"
+    ).filter("src != dst").write.parquet(str(tmp_path / "edges"))
+    edges = spark.read.parquet(str(tmp_path / "edges")).persist()
+    try:
+        want = {
+            r["node"]: r["rank"]
+            for r in pagerank(edges, iterations=4, epsilon=1, eager=True).collect()
+        }
+        assert edges.is_cached and edges.storageLevel.useMemory
+        lazy = pagerank(edges, iterations=4, epsilon=1)
+        assert {r["node"]: r["rank"] for r in lazy.collect()} == want
+        assert len(lazy.pr_caches) == 2
+        assert all(c is not edges for c in lazy.pr_caches)
+        for c in lazy.pr_caches:
+            c.unpersist()
+        assert edges.is_cached and edges.storageLevel.useMemory
+    finally:
+        edges.unpersist()
 
 
 def test_pagerank_deterministic_across_partitionings(spark):

@@ -379,18 +379,6 @@ def test_bpe_train_single_partition_vocab_identical(spark, sf_dir):
     assert b_single == b_multi == multi
     assert _persistent_ids(spark) - before == set()
 
-    # the env override gates the coalesce: budget 0 disables it
-    import os
-
-    os.environ["SPARK_GRAFT_BPE_ONE_PART_VOCAB"] = "0"
-    try:
-        assert (
-            bpe_train(docs, "text", num_merges=6, vocab_rows=n_vocab)
-            == multi
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_BPE_ONE_PART_VOCAB"]
-
 
 def test_pagerank_releases_superseded_checkpoints(spark):
     from ia_hadoop_tools_spark.operators.graph import pagerank

@@ -7,11 +7,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from ia_hadoop_tools_spark.plans.bucketing import (
-    bucketed_tables_join,
-    plan_has_exchange,
-    write_bucketed,
-)
+from ia_hadoop_tools_spark.plans.bucketing import bucketed_tables_join, write_bucketed
+from ia_hadoop_tools_spark.plans.introspect import plan_has_exchange
 from ia_hadoop_tools_spark.plans.partitioning import assign_range_ids, sample_boundaries
 
 
@@ -116,8 +113,6 @@ def test_plan_has_exchange_ignores_broadcast(spark):
     """A broadcast join has no shuffle: the diagnostic must answer False
     (the substring 'Exchange' also matched BroadcastExchange)."""
     from pyspark.sql import functions as F
-
-    from ia_hadoop_tools_spark.plans.bucketing import plan_has_exchange
 
     big = spark.range(1000).withColumnRenamed("id", "k")
     small = spark.range(10).withColumnRenamed("id", "k")
